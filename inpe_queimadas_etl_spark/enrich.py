@@ -8,25 +8,40 @@ with dynamic partition overwrite — same outcome (first-match
 attribution, stable under re-runs, checked flags all true after a
 pass), no mutable state (SURVEY.md §7.1).
 
-Attribution semantics preserved:
+One pass over the rows: a single mapInPandas reads each Arrow batch
+once and computes all four polygon ids with the numpy helpers of
+operators.geo, so the point side is serialized to Python once, not
+once per dimension:
 - municipality: point-in-polygon first (st_intersects,
-  20_enrich_municipio.sql:43-54), then nearest-within-2km fallback
-  (20:56-74);
+  20_enrich_municipio.sql:43-54), then, for the points no polygon
+  contains, the nearest municipality within 2 km (20:56-74);
 - biome/UC/TI: first-match by dimension id — the reference's
   `distinct on (event_hash) ... order by event_hash, b.id`
   (21_enrich_biomas_ucs_tis.sql:22-119) — which is exactly the
-  lowest-id-wins rule of operators.geo.point_in_polygon_join.
+  lowest-id-wins rule of operators.geo.pip_ids.
+Small broadcast joins then add each dimension's attributes and every
+row is marked checked (a miss is checked too, 21:45-59).
+The result equals point_in_polygon_join + knn_nearest_within composed
+per dimension (tests/test_domain_enrich.py holds that parity).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .functions.core import event_day
+from .operators.geo import (
+    PolyFeature,
+    PolyGridIndex,
+    _rebalance_for_compute,
+    knn_ids,
+    knn_pad_deg,
+    pip_ids,
+)
 from .session import local_df
-from .operators.geo import PolyFeature, knn_nearest_within, point_in_polygon_join
 
 
 def _dim_lookup(spark, feats: list[PolyFeature], id_name: str, attr_map: dict[str, str]):
@@ -49,63 +64,6 @@ def _dim_lookup(spark, feats: list[PolyFeature], id_name: str, attr_map: dict[st
     return local_df(spark, rows, T.StructType.fromDDL(schema))
 
 
-def attribute_municipality(
-    curated: DataFrame,
-    municipios: list[PolyFeature],
-    knn_radius_m: float = 2000.0,
-) -> DataFrame:
-    """J2 + J3: point-in-polygon municipality attribution with
-    nearest-within-radius fallback for coastal/edge points."""
-    spark = curated.sparkSession
-    pip = point_in_polygon_join(
-        curated, municipios, x_col="lon", y_col="lat", id_alias="mun_cd_mun"
-    )
-    matched = pip.filter(F.col("mun_cd_mun").isNotNull())
-    unmatched = pip.filter(F.col("mun_cd_mun").isNull()).drop("mun_cd_mun")
-    fallback = knn_nearest_within(
-        unmatched,
-        municipios,
-        max_dist_m=knn_radius_m,
-        x_col="lon",
-        y_col="lat",
-        id_alias="mun_cd_mun",
-        dist_alias="__dist_m",
-    ).drop("__dist_m")
-    both = matched.unionByName(fallback)
-
-    attrs = F.broadcast(
-        _dim_lookup(
-            spark,
-            municipios,
-            "mun_cd_mun",
-            {"mun_nm_mun": "nm_mun", "mun_uf": "uf", "__area": "area_km2"},
-        ).withColumn("mun_area_km2", F.col("__area").cast("double"))
-        .drop("__area")
-    )
-    return both.join(attrs, "mun_cd_mun", "left").withColumn(
-        "mun_checked", F.lit(True)
-    )
-
-
-def attribute_dim(
-    df: DataFrame,
-    feats: list[PolyFeature],
-    id_alias: str,
-    name_alias: str,
-    name_prop: str,
-    checked_alias: str,
-) -> DataFrame:
-    """J4/J8: first-match (lowest dim id) point-in-polygon attribution
-    for biome/UC/TI; rows are marked checked even on miss
-    (21_enrich_biomas_ucs_tis.sql:45-59)."""
-    spark = df.sparkSession
-    out = point_in_polygon_join(df, feats, x_col="lon", y_col="lat", id_alias=id_alias)
-    attrs = F.broadcast(
-        _dim_lookup(spark, feats, id_alias, {name_alias: name_prop})
-    )
-    return out.join(attrs, id_alias, "left").withColumn(checked_alias, F.lit(True))
-
-
 def enrich(
     curated: DataFrame,
     municipios: list[PolyFeature],
@@ -116,12 +74,55 @@ def enrich(
 ) -> DataFrame:
     """Full enrichment pass: event day + municipality (PIP + KNN) +
     biome/UC/TI first-match attribution."""
+    spark = curated.sparkSession
     df = curated.withColumn("event_day", event_day("view_ts", "file_date"))
-    df = attribute_municipality(df, municipios, knn_radius_m)
-    df = attribute_dim(df, biomas, "cd_bioma", "bioma_enr", "bioma", "bioma_checked")
-    df = attribute_dim(df, ucs, "cd_cnuc", "uc_nome", "nome_uc", "uc_checked")
-    df = attribute_dim(df, tis, "terrai_cod", "ti_nome", "terrai_nom", "ti_checked")
-    return df
+    df = _rebalance_for_compute(df, [*municipios, *biomas, *ucs, *tis])
+    mun_pip = PolyGridIndex(municipios)
+    mun_knn = PolyGridIndex(municipios, pad_deg=knn_pad_deg(knn_radius_m))
+    # id column -> (polygons, name column, dim property, checked flag)
+    firsts = {
+        "cd_bioma": (biomas, "bioma_enr", "bioma", "bioma_checked"),
+        "cd_cnuc": (ucs, "uc_nome", "nome_uc", "uc_checked"),
+        "terrai_cod": (tis, "ti_nome", "terrai_nom", "ti_checked"),
+    }
+    indexes = {col: PolyGridIndex(f[0]) for col, f in firsts.items()}
+    id_schema = T.StructType(
+        df.schema.fields
+        + [T.StructField(c, T.StringType()) for c in ("mun_cd_mun", *firsts)]
+    )
+
+    def attribute(batches):
+        for pdf in batches:
+            px = pdf["lon"].to_numpy(dtype="float64")
+            py = pdf["lat"].to_numpy(dtype="float64")
+            mun = pip_ids(mun_pip, px, py)
+            miss = pd.isna(mun)
+            mun[miss] = knn_ids(mun_knn, px[miss], py[miss], knn_radius_m)[0]
+            pdf["mun_cd_mun"] = mun
+            for col, index in indexes.items():
+                pdf[col] = pip_ids(index, px, py)
+            yield pdf
+
+    mun_attrs = _dim_lookup(
+        spark,
+        municipios,
+        "mun_cd_mun",
+        {"mun_nm_mun": "nm_mun", "mun_uf": "uf", "__area": "area_km2"},
+    ).withColumn("mun_area_km2", F.col("__area").cast("double")).drop("__area")
+    # each using-join puts its key first, which gives the enriched
+    # table its column order: terrai_cod, cd_cnuc, cd_bioma,
+    # mun_cd_mun, curated columns, event_day, then the attributes
+    out = (
+        df.mapInPandas(attribute, schema=id_schema)
+        .join(F.broadcast(mun_attrs), "mun_cd_mun", "left")
+        .withColumn("mun_checked", F.lit(True))
+    )
+    for col, (feats, name_col, prop, checked) in firsts.items():
+        attrs = _dim_lookup(spark, feats, col, {name_col: prop})
+        out = out.join(F.broadcast(attrs), col, "left").withColumn(
+            checked, F.lit(True)
+        )
+    return out
 
 
 def new_rows_only(curated_batch: DataFrame, existing: DataFrame | None) -> DataFrame:

@@ -145,16 +145,19 @@ class PolyGridIndex:
     instead of scanning the full dim. This is the task-local filter
     stage of the filter-refine plan — the numpy stand-in for the
     STRtree each Sedona partition would build, sized so the whole
-    index broadcasts with the dim."""
+    index broadcasts with the dim. Occupied cells are kept as sorted
+    integer keys over CSR member lists, so a batch's candidate pairs
+    come out of a few array operations with no per-cell Python loop."""
 
     def __init__(self, polys: list[PolyFeature], pad_deg: float = 0.0):
         self.polys = sorted(polys, key=lambda p: p.poly_id)
-        self.bboxes = np.array([p.bbox for p in self.polys], dtype="float64")
+        self.ids = np.array([p.poly_id for p in self.polys], dtype=object)
+        self.bboxes = np.array(
+            [p.bbox for p in self.polys], dtype="float64"
+        ).reshape(-1, 4)
         self.pad = pad_deg
         if not self.polys:
-            self.cell = 1.0
-            self.x0 = self.y0 = 0.0
-            self.cells: dict[tuple[int, int], np.ndarray] = {}
+            self.keys = np.zeros(0, dtype=np.int64)  # no cell: no pairs
             return
         w = self.bboxes[:, 2] - self.bboxes[:, 0]
         h = self.bboxes[:, 3] - self.bboxes[:, 1]
@@ -171,37 +174,114 @@ class PolyGridIndex:
             for i in range(i0, i1 + 1):
                 for j in range(j0, j1 + 1):
                     buckets.setdefault((i, j), []).append(k)
-        self.cells = {
-            key: np.asarray(v, dtype=np.int64) for key, v in buckets.items()
-        }
+        self.ni = max(i for i, _ in buckets) + 1
+        self.nj = max(j for _, j in buckets) + 1
+        cells = sorted(buckets)
+        self.keys = np.array([i * self.nj + j for i, j in cells], dtype=np.int64)
+        sizes = [len(buckets[c]) for c in cells]
+        self.starts = np.concatenate([[0], np.cumsum(sizes)]).astype(np.int64)
+        self.members = np.array(
+            [k for c in cells for k in buckets[c]], dtype=np.int64
+        )
 
-    def point_cells(self, px: np.ndarray, py: np.ndarray) -> np.ndarray:
-        """(n, 2) integer cell coordinates per point."""
-        ci = np.floor((px - self.x0) / self.cell).astype(np.int64)
-        cj = np.floor((py - self.y0) / self.cell).astype(np.int64)
-        return np.stack([ci, cj], axis=1)
+    def candidates(
+        self, px: np.ndarray, py: np.ndarray
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(point index, polygon index) pairs: every finite point with
+        every polygon listed in its cell whose bbox, grown by the
+        index's pad, covers the point. A point lies in one cell and a
+        cell lists a polygon once, so each pair is unique."""
+        empty = np.zeros(0, dtype=np.int64)
+        live = np.flatnonzero(np.isfinite(px) & np.isfinite(py))
+        if live.size == 0 or self.keys.size == 0:
+            return empty, empty
+        ci = np.floor((px[live] - self.x0) / self.cell)
+        cj = np.floor((py[live] - self.y0) / self.cell)
+        # range test in float first: a far point's cell number would
+        # overflow the int64 key
+        inside = (ci >= 0) & (ci < self.ni) & (cj >= 0) & (cj < self.nj)
+        live = live[inside]
+        key = ci[inside].astype(np.int64) * self.nj + cj[inside].astype(np.int64)
+        pos = np.minimum(np.searchsorted(self.keys, key), self.keys.size - 1)
+        found = self.keys[pos] == key
+        live, pos = live[found], pos[found]
+        counts = self.starts[pos + 1] - self.starts[pos]
+        pt = np.repeat(live, counts)
+        # member offset = cell start + rank of the pair within its cell
+        rank = np.arange(pt.size) - np.repeat(np.cumsum(counts) - counts, counts)
+        k = self.members[np.repeat(self.starts[pos], counts) + rank]
+        bb, pad = self.bboxes[k], self.pad
+        x, y = px[pt], py[pt]
+        keep = (
+            (x >= bb[:, 0] - pad)
+            & (x <= bb[:, 2] + pad)
+            & (y >= bb[:, 1] - pad)
+            & (y <= bb[:, 3] + pad)
+        )
+        return pt[keep], k[keep]
 
-    def group_points(self, px: np.ndarray, py: np.ndarray, mask: np.ndarray):
-        """Yield (candidate poly indices, point indices) per occupied
-        cell; points in cells with no candidates are skipped."""
-        if not self.cells or not mask.any():
-            return
-        cc = self.point_cells(px, py)
-        live = np.nonzero(mask)[0]
-        keys = cc[live]
-        order = np.lexsort((keys[:, 1], keys[:, 0]))
-        sorted_keys = keys[order]
-        sorted_idx = live[order]
-        boundaries = np.nonzero(
-            np.any(np.diff(sorted_keys, axis=0) != 0, axis=1)
-        )[0]
-        starts = np.concatenate([[0], boundaries + 1])
-        ends = np.concatenate([boundaries + 1, [sorted_keys.shape[0]]])
-        for s, e in zip(starts, ends):
-            key = (int(sorted_keys[s, 0]), int(sorted_keys[s, 1]))
-            cands = self.cells.get(key)
-            if cands is not None:
-                yield cands, sorted_idx[s:e]
+
+def _by_polygon(k: np.ndarray):
+    """Yield (polygon index, positions into ``k``) in ascending polygon
+    index order, i.e. ascending poly_id."""
+    if k.size == 0:
+        return
+    order = np.argsort(k, kind="stable")
+    for sel in np.split(order, np.flatnonzero(np.diff(k[order])) + 1):
+        yield int(k[sel[0]]), sel
+
+
+def pip_ids(index: PolyGridIndex, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+    """Point-in-polygon over one batch: the poly_id of the first
+    containing polygon (lowest poly_id) per point, None where no
+    polygon contains it or a coordinate is not finite. Polygons are
+    visited in id order and a point leaves the open set at its first
+    hit, so later candidates never ray-cast it."""
+    n = px.shape[0]
+    best = np.full(n, -1, dtype=np.int64)
+    pt, k = index.candidates(px, py)
+    for kk, sel in _by_polygon(k):
+        probe = pt[sel]
+        probe = probe[best[probe] < 0]
+        if probe.size:
+            hit = _contains(index.polys[kk], px[probe], py[probe])
+            best[probe[hit]] = kk
+    out = np.full(n, None, dtype=object)
+    found = best >= 0
+    out[found] = index.ids[best[found]]
+    return out
+
+
+def knn_pad_deg(max_dist_m: float) -> float:
+    """Bbox padding, in degrees, that safely covers ``max_dist_m``."""
+    return max_dist_m / 111_000.0 * 1.5
+
+
+def knn_ids(
+    index: PolyGridIndex, px: np.ndarray, py: np.ndarray, max_dist_m: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """Nearest polygon within ``max_dist_m`` per point over one batch,
+    as (poly_id or None, distance in meters or NaN). Containment is
+    distance 0. ``index`` must be built with
+    ``pad_deg=knn_pad_deg(max_dist_m)``. Polygons are visited in id
+    order and only strict improvements update, so ties keep the lowest
+    poly_id."""
+    n = px.shape[0]
+    best_d = np.full(n, np.inf)
+    best = np.full(n, -1, dtype=np.int64)
+    pt, k = index.candidates(px, py)
+    for kk, sel in _by_polygon(k):
+        probe = pt[sel]
+        poly = index.polys[kk]
+        d = _boundary_distance_m(poly, px[probe], py[probe])
+        d = np.where(_contains(poly, px[probe], py[probe]), 0.0, d)
+        better = d < best_d[probe]
+        best_d[probe[better]] = d[better]
+        best[probe[better]] = kk
+    ok = best_d <= max_dist_m
+    ids = np.full(n, None, dtype=object)
+    ids[ok] = index.ids[best[ok]]
+    return ids, np.where(ok, best_d, np.nan)
 
 
 _REBALANCE_MIN_VERTICES = 5_000
@@ -323,31 +403,12 @@ def point_in_polygon_join(
 
     def attribute(batches):
         for pdf in batches:
-            px = pdf[x_col].to_numpy(dtype="float64")
-            py = pdf[y_col].to_numpy(dtype="float64")
-            assigned = np.full(px.shape[0], None, dtype=object)
-            finite = np.isfinite(px) & np.isfinite(py)
-            # grid lookup: each occupied cell tests only its O(1)
-            # candidate polygons; candidates come back id-sorted, so
-            # first-match == lowest poly_id exactly as before
-            for cands, idx in index.group_points(px, py, finite):
-                open_idx = idx
-                for k in cands:
-                    if open_idx.shape[0] == 0:
-                        break
-                    bx0, by0, bx1, by1 = index.bboxes[k]
-                    cx, cy = px[open_idx], py[open_idx]
-                    box = (cx >= bx0) & (cx <= bx1) & (cy >= by0) & (cy <= by1)
-                    if not box.any():
-                        continue
-                    probe = open_idx[box]
-                    hit = _contains(index.polys[k], px[probe], py[probe])
-                    hit_idx = probe[hit]
-                    if hit_idx.shape[0]:
-                        assigned[hit_idx] = index.polys[k].poly_id
-                        open_idx = open_idx[~np.isin(open_idx, hit_idx)]
             pdf = pdf.copy()
-            pdf[id_alias] = assigned
+            pdf[id_alias] = pip_ids(
+                index,
+                pdf[x_col].to_numpy(dtype="float64"),
+                pdf[y_col].to_numpy(dtype="float64"),
+            )
             yield pdf
 
     return points.mapInPandas(attribute, schema=out_schema)
@@ -417,8 +478,7 @@ def knn_nearest_within(
     Narrow inputs rebalance across cores first (same CPU-bound-stage
     rationale as point_in_polygon_join)."""
     points = _rebalance_for_compute(points, polygons)
-    pad_deg = max_dist_m / 111_000.0 * 1.5
-    index = PolyGridIndex(polygons, pad_deg=pad_deg)
+    index = PolyGridIndex(polygons, pad_deg=knn_pad_deg(max_dist_m))
     out_schema = T.StructType(
         points.schema.fields
         + [
@@ -429,41 +489,13 @@ def knn_nearest_within(
 
     def nearest(batches):
         for pdf in batches:
-            px = pdf[x_col].to_numpy(dtype="float64")
-            py = pdf[y_col].to_numpy(dtype="float64")
-            best_d = np.full(px.shape[0], np.inf)
-            best_id = np.full(px.shape[0], None, dtype=object)
-            finite = np.isfinite(px) & np.isfinite(py)
-            # padded grid lookup: a cell's candidate list already
-            # includes every polygon whose bbox comes within the
-            # radius, so the per-point scan is O(candidates), not
-            # O(|dim|); candidates arrive id-sorted and only strict
-            # improvements update, so ties keep the lowest poly_id
-            for cands, idx in index.group_points(px, py, finite):
-                for k in cands:
-                    bx0, by0, bx1, by1 = index.bboxes[k]
-                    cx, cy = px[idx], py[idx]
-                    near = (
-                        (cx >= bx0 - pad_deg)
-                        & (cx <= bx1 + pad_deg)
-                        & (cy >= by0 - pad_deg)
-                        & (cy <= by1 + pad_deg)
-                    )
-                    if not near.any():
-                        continue
-                    probe = idx[near]
-                    poly = index.polys[k]
-                    d = _boundary_distance_m(poly, px[probe], py[probe])
-                    inside = _contains(poly, px[probe], py[probe])
-                    d = np.where(inside, 0.0, d)
-                    better = d < best_d[probe]
-                    upd = probe[better]
-                    best_d[upd] = d[better]
-                    best_id[upd] = poly.poly_id
-            ok = best_d <= max_dist_m
             pdf = pdf.copy()
-            pdf[id_alias] = np.where(ok, best_id, None)
-            pdf[dist_alias] = np.where(ok, best_d, np.nan)
+            pdf[id_alias], pdf[dist_alias] = knn_ids(
+                index,
+                pdf[x_col].to_numpy(dtype="float64"),
+                pdf[y_col].to_numpy(dtype="float64"),
+                max_dist_m,
+            )
             yield pdf
 
     return points.mapInPandas(nearest, schema=out_schema)

@@ -11,6 +11,9 @@ the same guarantees come from:
   a day replaces exactly the affected partitions (K2/K3);
 - event-day spillover handled by recomputing every event day present
   in the batch, not just the file date (SURVEY.md §7.6).
+- the curated append is a batch's last write and its commit point: a
+  run that fails before it leaves its rows new, so a plain re-run
+  redoes the enrichment and every mart.
 
 A whole date range is therefore ONE Spark job over all days — the
 per-day loop disappears; `run_range` just iterates extraction and
@@ -288,23 +291,30 @@ def process_batch(
     """Core incremental step: curated batch -> curated/enriched tables
     -> marts, idempotently. ``dims`` carries PolyFeature lists
     ('municipios','biomas','ucs','tis') and the uf_area DataFrame.
+
+    Commit order: enriched_focos, then the marts, then the curated
+    append. The append is the commit point: a run that fails before it
+    leaves the batch's rows "new", so a plain re-run enriches them
+    again, replaces them in enriched_focos (the merge drops prior rows
+    with the batch's hashes) and rebuilds every mart.
     """
     t0 = time.perf_counter()
     existing = warehouse.read(spark, "curated_focos")
-    # localCheckpoint truncates lineage BEFORE the append below —
-    # otherwise any recomputation re-lists curated_focos, sees its own
-    # freshly appended files, and the anti-join silently empties the
-    # batch (the classic read-your-own-append hazard). On a cluster
-    # this would be a staging-table write instead.
-    fresh = new_rows_only(curated_batch, existing).localCheckpoint(eager=True)
+    # The batch is transformed once: its row count and the anti-join
+    # both read this checkpoint. Checkpointing `fresh` truncates its
+    # lineage before the append below — otherwise a recomputation
+    # re-lists curated_focos, sees its own freshly appended files, and
+    # the anti-join silently empties the batch (the classic
+    # read-your-own-append hazard). On a cluster these would be
+    # staging-table writes instead.
+    batch = curated_batch.localCheckpoint(eager=True)
+    fresh = new_rows_only(batch, existing).localCheckpoint(eager=True)
     n_new = fresh.count()
 
-    metrics = {"rows_in_batch": curated_batch.count(), "rows_new": n_new}
+    metrics = {"rows_in_batch": batch.count(), "rows_new": n_new}
     if n_new == 0:
         metrics["seconds"] = round(time.perf_counter() - t0, 3)
         return metrics
-
-    warehouse.append(fresh, "curated_focos", partition_col="file_date")
 
     enriched_new = enrich(
         fresh,
@@ -319,9 +329,11 @@ def process_batch(
     day_strs = [str(d) for d in affected_days]
     prior = warehouse.read(spark, "enriched_focos")
     if prior is not None:
+        # rows of this batch already published by a run that failed
+        # before its curated append are replaced, not duplicated
         prior_affected = prior.filter(
             F.col("event_day").cast("string").isin(day_strs)
-        )
+        ).join(fresh.select("event_hash"), "event_hash", "left_anti")
         # materialize before overwriting the same partitions we read
         enriched_days = (
             prior_affected.unionByName(enriched_new.select(*prior.columns))
@@ -331,27 +343,26 @@ def process_batch(
         enriched_days = enriched_new
     warehouse.overwrite_partitions(enriched_days, "enriched_focos", "event_day")
 
-    # marts over the affected days (reload from the table so re-runs
-    # see the merged state)
-    enriched_all = warehouse.read(spark, "enriched_focos")
-    affected = enriched_all.filter(
-        F.col("event_day").cast("string").isin(day_strs)
-    )
-    daily_mun = marts.focos_diario_municipio(affected)
-    daily_uf = marts.focos_diario_uf(affected, dims["uf_area"])
+    # daily marts and the serving MV over the affected days, from the
+    # merged rows just published (enriched_days holds every row of
+    # those days)
+    daily_mun = marts.focos_diario_municipio(enriched_days)
+    daily_uf = marts.focos_diario_uf(enriched_days, dims["uf_area"])
     warehouse.overwrite_partitions(daily_mun, "focos_diario_municipio", "day")
     warehouse.overwrite_partitions(daily_uf, "focos_diario_uf", "day")
     warehouse.overwrite_partitions(
-        marts.focos_diario_bioma(affected), "focos_diario_bioma", "day"
+        marts.focos_diario_bioma(enriched_days), "focos_diario_bioma", "day"
     )
     warehouse.overwrite_partitions(
-        marts.focos_diario_uc(affected), "focos_diario_uc", "day"
+        marts.focos_diario_uc(enriched_days), "focos_diario_uc", "day"
     )
     warehouse.overwrite_partitions(
-        marts.focos_diario_ti(affected), "focos_diario_ti", "day"
+        marts.focos_diario_ti(enriched_days), "focos_diario_ti", "day"
     )
 
     # monthly marts: recompute affected months from the enriched table
+    # (a month holds more days than this batch touched)
+    enriched_all = warehouse.read(spark, "enriched_focos")
     affected_months = sorted({dt.date(d.year, d.month, 1) for d in affected_days})
     month_df = enriched_all.filter(
         F.trunc("event_day", "month").cast("string").isin(
@@ -367,10 +378,13 @@ def process_batch(
 
     # serving fact MV + trend view (full recompute — small aggregates)
     warehouse.overwrite_partitions(
-        marts.mv_focos_day_dim(affected), "mv_focos_day_dim", "day"
+        marts.mv_focos_day_dim(enriched_days), "mv_focos_day_dim", "day"
     )
     full_daily_uf = warehouse.read(spark, "focos_diario_uf")
     warehouse.overwrite(marts.focos_diario_uf_trend(full_daily_uf), "focos_diario_uf_trend")
+
+    # commit point: only now do this batch's rows stop being "new"
+    warehouse.append(fresh, "curated_focos", partition_col="file_date")
 
     metrics.update(
         {

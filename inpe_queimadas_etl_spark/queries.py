@@ -114,11 +114,14 @@ def _filter_pred(filters: dict[str, str | None], columns: list[str] | None = Non
     column exactly (no upper()) OR `upper(coalesce(name, '')) = v`.
     ``columns`` (the target DataFrame's schema) lets the same predicate
     run on the enriched events table, whose pre-mart column names
-    differ (_EVENTS_COL_FALLBACK)."""
+    differ (_EVENTS_COL_FALLBACK). The events-table name wins whenever
+    it is present: enriched_focos also carries INPE's raw ``bioma``
+    label, and the marts count the enriched biome."""
 
     def resolve(col: str) -> str:
-        if columns is not None and col not in columns:
-            return _EVENTS_COL_FALLBACK.get(col, col)
+        alt = _EVENTS_COL_FALLBACK.get(col)
+        if columns is not None and alt in columns:
+            return alt
         return col
 
     pred = F.lit(True)

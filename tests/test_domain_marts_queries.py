@@ -229,6 +229,23 @@ def test_points_applies_entity_filters(enriched):
     assert per_uf <= n_all  # filters partition (minus null-uf rows)
 
 
+def test_points_bioma_filter_uses_enriched_biome(enriched):
+    """The aggregate endpoints count the enriched biome, so points
+    must too: every row's raw INPE label is replaced by one no polygon
+    has, and the biome filters still select by bioma_enr."""
+    relabelled = enriched.withColumn("bioma", F.lit("Pantanal"))
+    day = dt.date(2024, 5, 2)
+    cerrado = enriched.filter(
+        (F.col("event_day") == F.lit(str(day)).cast("date"))
+        & (F.col("bioma_enr") == "Cerrado")
+    ).count()
+    assert cerrado > 0
+    df, _ = queries.points(relabelled, day, filters={"bioma": "cerrado"})
+    assert df.count() == cerrado
+    df, _ = queries.points(relabelled, day, filters={"bioma": "pantanal"})
+    assert df.count() == 0
+
+
 def test_validate_consistency(spark, fact):
     all_ufs = spark.createDataFrame([(u,) for u in G.UFS], "uf string")
     res = queries.validate_consistency(

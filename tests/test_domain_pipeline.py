@@ -496,3 +496,94 @@ def test_run_range_report_opt_out(spark, tmp_path, dims):
     )
     assert "report_md" not in result
     assert not (root / "docs").exists()
+
+
+PUBLISHED = (
+    "curated_focos", "enriched_focos", "focos_diario_municipio",
+    "focos_diario_uf", "focos_diario_bioma", "focos_diario_uc",
+    "focos_diario_ti", "focos_mensal_municipio", "focos_mensal_uf",
+    "mv_focos_day_dim", "focos_diario_uf_trend",
+)
+
+
+def _same_rows(a, b) -> bool:
+    b = b.select(*a.columns)
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_rerun_after_failed_publish_builds_every_mart(
+    spark, dims, tmp_path, monkeypatch
+):
+    """A run that dies in a mart publish has not appended its curated
+    rows yet, so a plain re-run redoes the batch: every table equals a
+    clean run's and enriched_focos holds each event once."""
+    csv_path = str(tmp_path / "focos.csv")
+    write_fixture_csv(csv_path, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+    clean = Warehouse(str(tmp_path / "clean"))
+    run_day(spark, clean, csv_path, FILE_DATE, dims)
+
+    crashed = Warehouse(str(tmp_path / "crashed"))
+    publish = Warehouse.overwrite_partitions
+
+    def failing(self, df, table, partition_col):
+        if table == "focos_diario_uf":
+            raise OSError("simulated crash in the focos_diario_uf publish")
+        return publish(self, df, table, partition_col)
+
+    monkeypatch.setattr(Warehouse, "overwrite_partitions", failing)
+    with pytest.raises(OSError):
+        run_day(spark, crashed, csv_path, FILE_DATE, dims)
+    monkeypatch.setattr(Warehouse, "overwrite_partitions", publish)
+    assert crashed.exists("enriched_focos")
+    assert not crashed.exists("curated_focos")
+
+    metrics = run_day(spark, crashed, csv_path, FILE_DATE, dims)
+    assert metrics["rows_new"] == G.N_VALID_UNIQUE
+    for table in PUBLISHED:
+        assert _same_rows(clean.read(spark, table), crashed.read(spark, table)), table
+    enriched = crashed.read(spark, "enriched_focos")
+    assert enriched.count() == enriched.select("event_hash").distinct().count()
+
+
+def test_daily_marts_match_a_reread_of_enriched(spark, dims, tmp_path):
+    """Daily marts and mv_focos_day_dim are built from the merged rows
+    in memory; after a spillover run and a same-day re-run with new
+    rows on both event days they equal the same builders over a fresh
+    read of enriched_focos for those days."""
+    from inpe_queimadas_etl_spark import marts
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    first = str(tmp_path / "first.csv")
+    write_fixture_csv(first, G.FOCOS_HEADER, G.FOCOS_ROWS, sep=";")
+    run_day(spark, wh, first, FILE_DATE, dims)
+    again = str(tmp_path / "again.csv")
+    write_fixture_csv(
+        again,
+        G.FOCOS_HEADER,
+        G.FOCOS_ROWS
+        + [
+            ["0.45", "0.45", "2024-05-02 18:00:00", "NOAA-20", "Mun m100", "AA", "Amazonia", "1.0"],
+            ["1.45", "2.45", "2024-05-01 22:00:00", "NOAA-20", "Mun m202", "BB", "Cerrado", "2.0"],
+        ],
+        sep=";",
+    )
+    metrics = run_day(spark, wh, again, FILE_DATE, dims)
+    assert metrics["rows_new"] == 2
+    days = sorted(metrics["affected_days"])
+    assert days == ["2024-05-01", "2024-05-02"]
+
+    enriched = wh.read(spark, "enriched_focos").filter(
+        F.col("event_day").cast("string").isin(days)
+    )
+    builders = {
+        "focos_diario_municipio": marts.focos_diario_municipio(enriched),
+        "focos_diario_uf": marts.focos_diario_uf(enriched, dims["uf_area"]),
+        "focos_diario_bioma": marts.focos_diario_bioma(enriched),
+        "focos_diario_uc": marts.focos_diario_uc(enriched),
+        "focos_diario_ti": marts.focos_diario_ti(enriched),
+        "mv_focos_day_dim": marts.mv_focos_day_dim(enriched),
+    }
+    for table, want in builders.items():
+        got = wh.read(spark, table).filter(F.col("day").cast("string").isin(days))
+        assert _same_rows(want, got), table
+    assert wh.read(spark, "focos_diario_uf").agg(F.sum("n_focos")).collect()[0][0] == 14

@@ -503,3 +503,28 @@ def test_cur10_eval_broadcasts_corpus_rolls_up_once(spark):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "partial" in plan.lower(), plan
+
+
+def test_enrich_is_one_python_pass(spark):
+    """The enrichment reads each point once: one MapInPandas computes
+    the municipality (PIP + KNN fallback), biome, UC and TI ids, with
+    no Union of matched and fallback branches; the dims' attributes
+    join by broadcast, so the point side never shuffles."""
+    import datetime as dt
+
+    from inpe_queimadas_etl_spark.enrich import enrich
+    from inpe_queimadas_etl_spark.schemas import CURATED_FOCOS
+
+    from . import fixtures_geo as G
+
+    points = spark.createDataFrame(
+        [("h", dt.date(2024, 5, 2), None, None, None, None, None, 0.5, 0.5, "{}")],
+        CURATED_FOCOS,
+    )
+    plan = _plan(
+        enrich(points, G.municipios(), G.biomas(), G.ucs(), G.tis()), "simple"
+    )
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Union" not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 4, plan
+    assert plan.count("Exchange") == plan.count("BroadcastExchange"), plan
